@@ -78,7 +78,7 @@ def main() -> None:
     shutil.rmtree(wh, ignore_errors=True)
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count() or 1))}]"
         )
         .appName("bucketed-neardup-demo")
         .config("spark.sql.warehouse.dir", wh)

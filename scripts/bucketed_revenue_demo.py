@@ -39,7 +39,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_sf100"
     wh = "/tmp/bucketed_demo_wh"
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count() or 1))}]"
+        )
         .appName("bucketed-revenue-demo")
         .config("spark.sql.warehouse.dir", wh)
         .config("spark.driver.memory", "48g")

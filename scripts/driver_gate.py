@@ -14,7 +14,6 @@ Exit 0 iff every checked query is green.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import struct
@@ -88,7 +87,6 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     queries = all_queries()
-    results: dict[str, dict] = {}
     n_green = n_red = n_rowsonly = 0
     for name, q in queries.items():
         if only and name not in only:
@@ -102,13 +100,10 @@ def main() -> int:
             rec["spark_rows"] = len(srows)
         except Exception as e:  # noqa: BLE001
             rec["err"] = f"spark: {type(e).__name__}: {e}"
-            results[name] = rec
             n_red += 1
             print(f"ERR   {name}: {rec['err'][:200]}")
             continue
         if q.oracle is None:
-            rec["check"] = "rows_only"
-            results[name] = rec
             n_rowsonly += 1
             print(f"ROWS  {name}: {rec['spark_rows']} rows ({time.perf_counter()-t0:.1f}s)")
             continue
@@ -119,7 +114,6 @@ def main() -> int:
             rec["oracle_rows"] = len(drows)
         except Exception as e:  # noqa: BLE001
             rec["err"] = f"duckdb: {type(e).__name__}: {e}"
-            results[name] = rec
             n_red += 1
             print(f"ERR   {name}: {rec['err'][:200]}")
             continue
@@ -135,7 +129,6 @@ def main() -> int:
                 rec["first_diffs"] = repr(diffs)[:500]
         else:
             rec["hash_match"] = False
-        results[name] = rec
         ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
         n_green += ok
         n_red += not ok
@@ -149,8 +142,6 @@ def main() -> int:
             print(f"      {rec['first_diffs'][:300]}")
 
     print(f"\nGREEN={n_green} RED={n_red} ROWS_ONLY={n_rowsonly}")
-    with open("/tmp/gate_sim.json", "w") as f:
-        json.dump(results, f, indent=1, default=str)
     return 0 if n_red == 0 else 1
 
 

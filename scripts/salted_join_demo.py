@@ -43,7 +43,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_sf10"
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count() or 1))}]"
         )
         .appName("salted-join-demo")
         .config("spark.driver.memory", "48g")

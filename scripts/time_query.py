@@ -1,9 +1,9 @@
 """Time named queries (steady-state, noop sink) vs their DuckDB oracles.
 
 Usage: python scripts/time_query.py [sf_dir] q1 q2 ...
-Mirrors bench.py methodology: warm-up, cold + 2 steady runs (min), DuckDB
-min-of-3 after warm. For iterating on single-query optimizations without
-paying the full 69-query bench.
+Method: warm-up, cold + 2 steady runs (min), DuckDB min-of-3 after warm.
+For iterating on single-query optimizations without running the whole
+registry.
 """
 
 from __future__ import annotations

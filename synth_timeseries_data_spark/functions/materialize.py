@@ -12,34 +12,26 @@ At cluster scale the equivalent is writing the relation to storage once
 (functions/scale.py::write_bucketed on the join key) and scanning it
 thereafter; this memo is the session-lifetime form of that artifact.
 
-Keyed on SparkSession identity (not applicationId): a checkpointed DataFrame
-is bound to the session that built it — ``newSession()`` in the same
-application has its own catalog and must not be handed a foreign DataFrame.
-The value keeps a strong reference to the session, so CPython cannot recycle
-the id() for a new session while the entry is alive. Assumes the inputs the
-builder reads are immutable for the session's lifetime (true for the
-driver's read-only fixtures and for driver-side literals).
+Both memos live in the session's state (:func:`session.session_state`), so
+an entry lives exactly as long as its session and is only ever handed to the
+session that built it. Assumes the inputs the builder reads are immutable
+for the session's lifetime (true for the driver's read-only fixtures and for
+driver-side literals).
 
-The lock serializes concurrent gate workers (the driver runs queries at 5-
-and 32-way parallelism): without it, stale-entry eviction iterates the dict
-while another thread inserts (RuntimeError), and racing threads rebuild the
-same relation redundantly. The build runs under the lock on purpose — one
-thread materializes, the rest reuse.
+Builds run under the session's lock on purpose: the driver runs queries at
+5- and 32-way parallelism, and without it racing threads would rebuild the
+same relation redundantly — one thread materializes, the rest reuse.
 """
 
 from __future__ import annotations
 
-import threading
+import weakref
 from typing import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-# RLock, not Lock: a build function may itself call materialized() for its
-# inputs (dedup_clusters materializes the minhash pair relation, whose
-# build materializes the LSH index relations) — a plain Lock deadlocks on
-# that same-thread reentry
-_LOCK = threading.RLock()
+from ..session import session_state
 
 
 def materialized(
@@ -47,23 +39,13 @@ def materialized(
 ) -> DataFrame:
     """Return the session's materialized relation for ``key``, building it
     with ``build()`` (then localCheckpoint) on first use."""
-    sid = id(spark)
-    k = (sid, key)
-    with _LOCK:
-        # entries from dead sessions can never be used again — evict them
-        # so a long-lived process recreating sessions doesn't pin old plans
-        for stale in [s for s in _CACHE if s[0] != sid]:
-            del _CACHE[stale]
-        hit = _CACHE.get(k)
-        if hit is None:
-            df = build().localCheckpoint()
-            _CACHE[k] = (spark, df)
-        else:
-            df = hit[1]
+    state = session_state(spark)
+    with state.lock:
+        memo = state.setdefault("materialized", {})
+        df = memo.get(key)
+        if df is None:
+            df = memo[key] = build().localCheckpoint()
     return df
-
-
-_PCACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def persisted(
@@ -76,25 +58,32 @@ def persisted(
     BroadcastExchange rebuilds its hash relation every execution either
     way — and building it from persist()'s in-memory columnar batches
     measures ~30% faster than from a LogicalRDD (revenue_by_nation bridge:
-    0.44 s vs 0.62 s steady). Same session-identity keying, staleness and
-    locking assumptions as `materialized`; include the input dir in `key`
-    when the relation depends on it. The first execution both computes and
-    caches (persist is lazy) — no separate materialization job. At cluster
-    scale this is the session dimension cache every warehouse engine keeps
-    (the bridge is dimension-sized: |orders| rows, 2 int columns)."""
-    sid = id(spark)
-    k = (sid, key)
-    with _LOCK:
-        for stale in [s for s in _PCACHE if s[0] != sid]:
-            try:
-                _PCACHE[stale][1].unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
-            del _PCACHE[stale]
-        hit = _PCACHE.get(k)
-        if hit is None:
-            df = build().persist()
-            _PCACHE[k] = (spark, df)
-        else:
-            df = hit[1]
+    0.44 s vs 0.62 s steady). Same session lifetime, staleness and locking
+    assumptions as `materialized`; include the input dir in `key` when the
+    relation depends on it. The first execution both computes and caches
+    (persist is lazy) — no separate materialization job. At cluster scale
+    this is the session dimension cache every warehouse engine keeps (the
+    bridge is dimension-sized: |orders| rows, 2 int columns).
+
+    Spark's cache manager is shared by every session of the application
+    and matches cached data by plan: a session persisting a plan that
+    another live session already cached reuses that cache. The relation is
+    unpersisted when its session is garbage-collected; a live session that
+    shared the plan keeps correct results and recomputes them."""
+    state = session_state(spark)
+    with state.lock:
+        memo = state.setdefault("persisted", {})
+        df = memo.get(key)
+        if df is None:
+            df = memo[key] = build().persist()
+            # the finalizer holds only the JVM handle: a DataFrame would
+            # refer to the session and keep it alive
+            weakref.finalize(spark, _unpersist, df._jdf).atexit = False
     return df
+
+
+def _unpersist(jdf) -> None:
+    try:
+        jdf.unpersist(False)
+    except Py4JError:  # the JVM is already gone — nothing to free
+        pass

@@ -11,10 +11,11 @@ reads the planned partitioning driver-side (no job).
 
 from __future__ import annotations
 
-import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import session_state
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -30,11 +31,6 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-# sid → (session pinned so CPython can't recycle the id, {view: source key})
-_REGISTERED: dict[int, tuple[SparkSession, dict[str, str]]] = {}
-_LOCK = threading.Lock()
-
-
 def register_spread_view(
     spark: SparkSession,
     view: str,
@@ -45,16 +41,15 @@ def register_spread_view(
     """Register ``view`` as the spread form of ``build()`` once per
     (session, key) — repeat builds of the same query skip the planning
     probe entirely. ``key`` is the data source (sf_dir); a session that
-    switches sources re-registers."""
-    sid = id(spark)
-    with _LOCK:
-        for stale in [s for s in _REGISTERED if s != sid]:
-            del _REGISTERED[stale]
-        sess = _REGISTERED.setdefault(sid, (spark, {}))
+    switches sources re-registers. The ``{view: key}`` memo lives in the
+    session's state, as long as the session and its temp views do."""
+    state = session_state(spark)
+    with state.lock:
+        views = state.setdefault("spread_views", {})
         # the existence check (cheap catalog lookup, ~ms) guards against a
         # caller having dropped the temp view since we registered it — the
         # memo alone would then skip and leave the query unresolvable
-        if sess[1].get(view) == key and spark.catalog.tableExists(view):
+        if views.get(view) == key and spark.catalog.tableExists(view):
             return
         spread(build(), *cols).createOrReplaceTempView(view)
-        sess[1][view] = key
+        views[view] = key

@@ -1175,16 +1175,9 @@ def pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WORSE (24 -> 77 s at sf10 — the exchange cost exceeds any
     parallelism win on a 150k-row relation). FLOOR.md §r10-pacf."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    from . import forced_strategy
     from ..sources import table_rows
 
-    force = forced_strategy()
-    use_numpy = (
-        (force == "scale")
-        if force
-        else table_rows(sf_dir, "events") > _PACF_NUMPY_GATE
-    )
-    if use_numpy:
+    if table_rows(sf_dir, "events") > _PACF_NUMPY_GATE:
         return _pacf_numpy(spark)
     return spark.sql(_pacf_sql(True))
 

@@ -1,27 +1,28 @@
-"""SparkSession builders.
+"""SparkSession builders and the engine's per-session state.
 
 Local test posture: one JVM, ``local[N]`` threads, shuffle partitions ≈ cores.
 Cluster posture (100 TB): the same code runs unmodified — AQE handles skew and
 partition coalescing; all operators avoid driver-side collects and express
 plans declaratively so Catalyst can push filters/prune columns.
+
+Everything the engine remembers about one session (resolved relations,
+materialized and persisted memos, spread views, the tuned posture) lives in
+:func:`session_state`, which is kept on the session object itself: it lives
+exactly as long as the session, and a dropped session takes it along.
 """
 
 from __future__ import annotations
 
 import os
-import weakref
+import threading
 
 from pyspark.sql import SparkSession
 
 
 def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Shuffle parallelism is decoupled from executor threads: at local test
-    # scale the data is small enough that fewer, larger shuffle partitions
-    # beat per-task scheduling overhead; AQE still coalesces further. On a
-    # real cluster SPARK_GRAFT_SHUFFLE would be sized to the data (~128 MB
-    # per partition), not to the core count.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", cpus)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    # Shuffle partitions start at the core count; tune_for_input resizes
+    # them to the input footprint before each registry build.
     # AQE on is the cluster posture (skew-join splitting, runtime partition
     # coalescing, dynamic broadcast) and measured best in aggregate locally
     # too: its per-exchange stage materialization costs ~100 ms per shuffle
@@ -29,17 +30,15 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     # turning it off regresses every query that leans on shuffle coalescing
     # (edge_tensor 0.9 s → 1.1 s, ngram_jaccard 0.6 s → 1.2 s) and the
     # derived-candidate joins now carry explicit BROADCAST hints so neither
-    # mode mis-plans them. SPARK_GRAFT_AQE=false flips the trade for
-    # latency-critical small-query workloads. Correctness is AQE-independent
-    # (the one AQE hazard — coalescing the kernel-sweep grid to one
-    # partition — is pinned by an explicit repartition; see
-    # queries/generation.py).
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "true")
+    # mode mis-plans them; tune_for_input turns it off for small inputs.
+    # Correctness is AQE-independent (the one AQE hazard — coalescing the
+    # kernel-sweep grid to one partition — is pinned by an explicit
+    # repartition; see queries/generation.py).
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", aqe)
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -82,6 +81,50 @@ def fast_commit(spark: SparkSession) -> None:
 
 
 # ---------------------------------------------------------------------------
+# Per-session state.
+# ---------------------------------------------------------------------------
+
+# Attribute of the SparkSession object that holds its SessionState.
+_STATE_ATTR = "_synth_ts_state"
+
+
+class SessionState(dict):
+    """What the engine keeps for one SparkSession: a dict from a layer's
+    name (``"load"``, ``"materialized"``, ``"persisted"``,
+    ``"spread_views"``, ``"posture"``, ``"applied_posture"``) to that
+    layer's state, plus ``lock``, the lock the session's memo builds run
+    under.
+
+    The lock is per session, so a build in one session never waits on
+    another session's build. It is an RLock because a build may itself
+    call a memo for its inputs (dedup_clusters materializes the minhash
+    pair relation, whose build materializes the LSH index relations)."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.lock = threading.RLock()
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The state of ``spark``, created on first use.
+
+    It is kept in the session object's own ``__dict__``, so it lives exactly
+    as long as the session: entries are never shared between sessions (a
+    ``newSession()`` has its own catalog and must not be handed a foreign
+    DataFrame), two live sessions never evict each other, and a dropped
+    session is freed with everything it built. DataFrames in the state refer
+    back to their session; that cycle is collected like any other. State
+    that must be released in the JVM when the session goes (persisted
+    relations) registers a ``weakref.finalize`` on the session."""
+    d = vars(spark)
+    state = d.get(_STATE_ATTR)
+    if state is None:
+        # dict.setdefault is atomic: racing first calls share one state
+        state = d.setdefault(_STATE_ATTR, SessionState())
+    return state
+
+
+# ---------------------------------------------------------------------------
 # Input-stat session tuning (cost-based DOP selection).
 # ---------------------------------------------------------------------------
 
@@ -95,9 +138,7 @@ def fast_commit(spark: SparkSession) -> None:
 # tiers (171 MB/1.7 GB) in cluster posture. Measured at sf0.1: the 2-4-wave
 # floor-band queries drop 15-30% (corpus_filter 0.72->0.53 s, decontam
 # 0.85->0.60 s, asof_lag 1.12->0.65 s) with no data-proportional regression.
-_SMALL_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_INPUT", str(64 * 1024 * 1024))
-)
+_SMALL_INPUT_BYTES = 64 * 1024 * 1024
 _SMALL_SHUFFLE = "8"
 
 # Above the small gate, shuffle DOP must GROW with the input or per-task
@@ -110,23 +151,10 @@ _SMALL_SHUFFLE = "8"
 # sub-linear decade trend; AQE coalesces the count back down for queries that
 # touch only a slice of the directory. This is exactly the knob a cluster job
 # sizes first — the ladder just proved the local harness needs the same rule.
-_TARGET_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PARTITION_BYTES", str(64 * 1024 * 1024))
-)
+_TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 _MAX_SHUFFLE = 4096
 
 _dir_bytes: dict[str, int] = {}
-# Keyed WEAKLY on the session object, not id(): the allocator reuses
-# addresses after gc, so an id-keyed entry from a dead session could make
-# tune_for_input skip conf writes (or restore a stale posture) on a brand-new
-# session that happens to share the address — same hazard sources/tables.py's
-# catalog cache guards against.
-_applied: "weakref.WeakKeyDictionary[SparkSession, bool]" = (
-    weakref.WeakKeyDictionary()
-)
-_session_posture: "weakref.WeakKeyDictionary[SparkSession, tuple[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def _input_bytes(sf_dir: str) -> int:
@@ -161,22 +189,19 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
 
     Called by the query registry before each build; the dir footprint is
     memoized per sf_dir and conf writes happen only on posture CHANGE, so
-    repeat builds cost two dict hits. An explicit SPARK_GRAFT_AQE /
-    SPARK_GRAFT_SHUFFLE wins over the heuristic for its own knob, and
-    SPARK_GRAFT_AUTOTUNE=off disables it entirely. Both branches set their
-    knobs explicitly (restoring the session's original posture in the
-    large branch) so one session can serve mixed input scales — e.g. the
-    sf0.001 gate then the sf10 ladder."""
-    if os.environ.get("SPARK_GRAFT_AUTOTUNE", "on") == "off":
-        return
+    repeat builds cost two dict hits. Both branches set their knobs
+    explicitly (restoring the session's original posture, kept in its
+    state as ``"posture"``, in the large branch) so one session can serve
+    mixed input scales — e.g. the sf0.001 gate then the sf10 ladder."""
     nbytes = _input_bytes(sf_dir)
     small = nbytes < _SMALL_INPUT_BYTES
-    if spark not in _session_posture:
-        _session_posture[spark] = (
+    state = session_state(spark)
+    if "posture" not in state:
+        state["posture"] = (
             spark.conf.get("spark.sql.adaptive.enabled", "true"),
             spark.conf.get("spark.sql.shuffle.partitions", "200"),
         )
-    orig_aqe, orig_shuffle = _session_posture[spark]
+    orig_aqe, orig_shuffle = state["posture"]
     if small:
         shuffle = _SMALL_SHUFFLE
     else:
@@ -186,12 +211,8 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
             min(_MAX_SHUFFLE,
                 max(int(orig_shuffle), nbytes // _TARGET_PARTITION_BYTES))
         )
-    if _applied.get(spark) == (small, shuffle):
+    if state.get("applied_posture") == (small, shuffle):
         return
-    if os.environ.get("SPARK_GRAFT_AQE") is None:
-        spark.conf.set(
-            "spark.sql.adaptive.enabled", "false" if small else orig_aqe
-        )
-    if os.environ.get("SPARK_GRAFT_SHUFFLE") is None:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
-    _applied[spark] = (small, shuffle)
+    spark.conf.set("spark.sql.adaptive.enabled", "false" if small else orig_aqe)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    state["applied_posture"] = (small, shuffle)

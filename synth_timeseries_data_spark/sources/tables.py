@@ -9,11 +9,12 @@ get predicate pushdown + column pruning from Catalyst for free; callers should
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import session_state
 
 TABLES = (
     "region",
@@ -38,11 +39,21 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 # cache key includes the file's (mtime, size) so a rewritten dataset is
 # re-resolved, and the stat() costs microseconds. DataFrames are immutable
 # logical plans, so sharing one across queries is safe by construction.
-# Keyed WEAKLY on the session object (not id(), which the allocator reuses
-# after gc) so entries die with their session.
-_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+# The cache is the session's ``"load"`` state (session.session_state), so its
+# entries die with their session.
+
+
+class _LoadCatalog:
+    """Read access to every session's resolved-relation cache:
+    ``_LOAD_CACHE.get(spark, default)`` is ``spark``'s ``{key: DataFrame}``.
+    perfbench/tracing.py counts ``load`` misses by the growth of its length."""
+
+    @staticmethod
+    def get(spark: SparkSession, default=None):
+        return session_state(spark).get("load", default)
+
+
+_LOAD_CACHE = _LoadCatalog()
 
 
 def _fingerprint(path: str) -> tuple[float, int]:
@@ -149,7 +160,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # on load() (re)setting it as a session side effect, and cache hits must
     # not skip it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    per_session = _LOAD_CACHE.setdefault(spark, {})
+    per_session = session_state(spark).setdefault("load", {})
     key = (sf_dir, name) + _fingerprint(path)
     cached = per_session.get(key)
     if cached is not None:

@@ -33,14 +33,14 @@ def test_big_input_scales_partitions(spark, monkeypatch):
 
 def test_mid_input_keeps_session_dop(spark, monkeypatch):
     # above the small gate but under base-DOP x target: keep the session DOP
-    base = int(sess._session_posture[spark][1])
+    base = int(sess.session_state(spark)["posture"][1])
     got = int(_with_bytes(monkeypatch, spark, 128 << 20))
     assert got == base
 
 
 def test_posture_restored_after_big(spark, monkeypatch):
     _with_bytes(monkeypatch, spark, 17 * (1 << 30))
-    base = int(sess._session_posture[spark][1])
+    base = int(sess.session_state(spark)["posture"][1])
     assert int(_with_bytes(monkeypatch, spark, 128 << 20)) == base
     # and the cap engages
     assert (

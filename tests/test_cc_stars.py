@@ -160,18 +160,25 @@ def test_driver_union_find_matches_hybrid_and_stars(spark):
 def test_dedup_clusters_gate_paths_row_equal(spark, oracle_sf_dir):
     # the registered query must emit IDENTICAL rows whichever CC path the
     # gate picks: force the distributed path by dropping the pair gate to
-    # zero and compare against the (default) driver union-find path
+    # zero and compare against the (default) driver union-find path. The
+    # labels are memoized per session, so the forced build runs in a new
+    # session — in the same one it would reuse the driver path's labels.
     import synth_timeseries_data_spark.queries.llm_pipeline as lp
     from synth_timeseries_data_spark.queries import all_queries
 
     build = all_queries()["dedup_clusters"].build
     fast = sorted(map(tuple, build(spark, oracle_sf_dir).collect()))
-    old = lp._CC_DRIVER_PAIRS
+    old, hybrid = lp._CC_DRIVER_PAIRS, lp._cc_hybrid
+    hybrid_calls = []
     lp._CC_DRIVER_PAIRS = -1
+    lp._cc_hybrid = lambda edges: hybrid_calls.append(1) or hybrid(edges)
     try:
-        slow = sorted(map(tuple, build(spark, oracle_sf_dir).collect()))
+        slow = sorted(
+            map(tuple, build(spark.newSession(), oracle_sf_dir).collect())
+        )
     finally:
-        lp._CC_DRIVER_PAIRS = old
+        lp._CC_DRIVER_PAIRS, lp._cc_hybrid = old, hybrid
+    assert hybrid_calls == [1]
     assert fast == slow and len(fast) > 0
 
 

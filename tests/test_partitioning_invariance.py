@@ -104,18 +104,19 @@ _DOPS = (1, 7, 64)
 
 
 def _rows(spark, name: str) -> list[str]:
-    df = all_queries()[name].build(spark, SF_SMALL)
+    # the unwrapped builder: the registry's tune_for_input must not override
+    # the DOP under test
+    df = all_queries()[name].build.__wrapped__(spark, SF_SMALL)
     # repr is the shortest round-trip float form: distinct bit patterns of
     # distinct values stay distinct (incl. -0.0 vs 0.0) and NaN == NaN.
     return sorted(repr(tuple(r)) for r in df.collect())
 
 
 @pytest.mark.parametrize("name", _QUERIES)
-def test_results_invariant_under_shuffle_dop(spark, name, monkeypatch):
-    # Pin the posture: the registry's tune_for_input must not override the
-    # DOP under test, and AQE's runtime coalescing is disabled so DOP=64
-    # really combines 64 ways instead of being merged back to a few tasks.
-    monkeypatch.setenv("SPARK_GRAFT_AUTOTUNE", "off")
+def test_results_invariant_under_shuffle_dop(spark, name):
+    # Pin the posture: _rows bypasses tune_for_input, and AQE's runtime
+    # coalescing is disabled so DOP=64 really combines 64 ways instead of
+    # being merged back to a few tasks.
     orig_dop = spark.conf.get("spark.sql.shuffle.partitions")
     orig_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
