@@ -171,6 +171,7 @@ def minhash_delta_pairs(
     docagg_table: str,
     mem_table: str,
     delta_where: str,
+    delta_docagg: "str | None" = None,
 ) -> DataFrame:
     """Ingest-time incremental dedup against the persisted MinHash index:
     near-duplicate pairs (doc_a < doc_b, exact Jaccard ≥ 0.5) where at
@@ -188,7 +189,13 @@ def minhash_delta_pairs(
     scales (pinned in test_scale_techniques.py); the batch dense-bucket
     guard is not applied to the delta probe (an ingest batch is bounded
     by contract; a hot indexed bucket bounds fan-out at m per probe
-    row)."""
+    row).
+
+    ``delta_docagg`` names a view the caller already holds over the
+    delta's doc aggregate (``_mh_docagg_sql`` over the ``delta_where``
+    shingles, e.g. checkpointed for its own state append); the probe then
+    reads it instead of building one, and the caller keeps ownership —
+    the view is left registered."""
     from ..queries import llm_pipeline as lp
 
     _index_session_confs(spark)
@@ -205,13 +212,15 @@ def minhash_delta_pairs(
     # checkpointed blocks: they are freed when the result DataFrame is
     # garbage-collected (JVM ContextCleaner). Without the drop, a
     # long-lived ingest loop would leak one checkpointed delta aggregate
-    # per batch into the session catalog.
+    # per batch into the session catalog. A caller-supplied
+    # ``delta_docagg`` view is the caller's to drop.
     import uuid
 
-    dagg_view = f"_mh_delta_docagg_{uuid.uuid4().hex[:12]}"
-    spark.sql(
-        _mh_shingles_cte(delta_where) + lp._mh_docagg_sql(d)
-    ).localCheckpoint().createOrReplaceTempView(dagg_view)
+    dagg_view = delta_docagg or f"_mh_delta_docagg_{uuid.uuid4().hex[:12]}"
+    if delta_docagg is None:
+        spark.sql(
+            _mh_shingles_cte(delta_where) + lp._mh_docagg_sql(d)
+        ).localCheckpoint().createOrReplaceTempView(dagg_view)
     result = spark.sql(
         f"WITH dsigs AS ({lp._mh_sigs_sql(d, dagg_view)})"
         + f""",
@@ -247,7 +256,8 @@ def minhash_delta_pairs(
     WHERE CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.5
     """
     )
-    spark.catalog.dropTempView(dagg_view)
+    if delta_docagg is None:
+        spark.catalog.dropTempView(dagg_view)
     return result
 
 

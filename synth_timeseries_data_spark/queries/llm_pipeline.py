@@ -1189,6 +1189,36 @@ def _cc_driver_labels(pairs) -> dict[int, int]:
     return {v: find(v) for v in parent}
 
 
+def _cc_labels(
+    spark: SparkSession,
+    pairs: DataFrame,
+    n_pairs: "int | None" = None,
+    n_docs: int = 0,
+) -> DataFrame:
+    """Component labels (v, label = component min) of the two-column pair
+    relation ``pairs`` — the one connected-components strategy gate.
+
+    At most ``_CC_DRIVER_PAIRS`` pairs run the driver union-find over one
+    collect; more run ``_cc_hybrid``. ``n_pairs`` is the pair count when
+    the caller already knows it (parquet footers): the collect is then
+    the only job. Without it a bounded probe (``limit(gate + 1)``)
+    decides, skipped when ``n_docs`` — the corpus rows behind the pairs —
+    is past ``_CC_DRIVER_DOCS``, so real scale never pays it. The gate
+    and ``_cc_hybrid`` are read at call time (tests and plan-dump scripts
+    rebind them to force the distributed path)."""
+    head = None
+    if n_pairs is None:
+        if n_docs <= _CC_DRIVER_DOCS:
+            head = pairs.limit(_CC_DRIVER_PAIRS + 1).collect()
+    elif n_pairs <= _CC_DRIVER_PAIRS:
+        head = pairs.collect()
+    if head is not None and len(head) <= _CC_DRIVER_PAIRS:
+        lab = _cc_driver_labels((r[0], r[1]) for r in head)
+        return spark.createDataFrame(sorted(lab.items()), "v long, label long")
+    labels, _ = _cc_hybrid(pairs.toDF("a", "b"))
+    return labels
+
+
 @register("dedup_clusters", _clusters_duck_sql())
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash near-dup pair graph —
@@ -1196,7 +1226,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id. Dedup pipelines keep ONE doc per component, so clustering
     the pairs is the step that makes pair generation actionable.
 
-    Strategy gate (r10 optimization): below ``_CC_DRIVER_PAIRS`` near-dup
+    Strategy gate (r10 optimization, shared with the incremental curation
+    snapshot through ``_cc_labels``): below ``_CC_DRIVER_PAIRS`` near-dup
     pairs (and ``_CC_DRIVER_DOCS`` corpus rows, so real scale never pays
     the probe) the component labels come from a driver-side union-find
     over ONE bounded collect of the pair relation — the pair graph is
@@ -1225,20 +1256,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select("doc_a", "doc_b")
 
-    try_driver = table_rows(sf_dir, "documents") <= _CC_DRIVER_DOCS
-
-    def _build_labels() -> DataFrame:
-        if try_driver:
-            # bounded probe: one job over the already-materialized pair
-            # relation; returns ≤ gate+1 rows regardless of true pair count
-            head = pairs.limit(_CC_DRIVER_PAIRS + 1).collect()
-            if len(head) <= _CC_DRIVER_PAIRS:
-                lab = _cc_driver_labels((r[0], r[1]) for r in head)
-                return spark.createDataFrame(
-                    sorted(lab.items()), "v long, label long"
-                )
-        labels, _ = _cc_hybrid(pairs.toDF("a", "b"))
-        return labels
+    n_docs = table_rows(sf_dir, "documents")
 
     # labels memoized per (session, corpus) alongside the mh_pairs entry
     # (ADVICE r10: without this, every below-gate invocation re-ran the
@@ -1246,7 +1264,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-materialized — and the curation workflow consumes clusters
     # 2-3 times per build). Same in-memory, session-lifetime discipline as
     # mh_pairs itself.
-    labels = materialized(spark, f"cc_labels|{sf_dir}", _build_labels)
+    labels = materialized(
+        spark, f"cc_labels|{sf_dir}", lambda: _cc_labels(spark, pairs, n_docs=n_docs)
+    )
     w_size = F.count("*").over(Window.partitionBy("cluster_rep"))
     return labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")

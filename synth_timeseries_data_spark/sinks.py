@@ -158,7 +158,6 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALITY-PASSING member per near-dup cluster (plain min when no member
     passes). LEFT joins throughout: a doc with NULL text still gets its
     audit row (NULL signals, keep follows the coalesced gates)."""
-    from .functions.scale import broadcast_if_small
     from .queries.corpus_ext import gopher_rules
     from .queries.llm_pipeline import (
         _SPARK_D,
@@ -184,23 +183,43 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_tokens", "logw_nats", "more_target_like"
     )
     doc_bytes = table_rows(sf_dir, "documents") * 32
-    # Quality-aware survivor per cluster: min doc_id among quality-passing
-    # members (fallback: the plain cluster_rep when none pass). clusters is
-    # near-dup-proportional — both joins below broadcast under the gate.
     clusters = dedup_clusters(spark, sf_dir).select("doc_id", "cluster_rep")
-    # r10 optimization: the survivor pick is ONE window over the
-    # (near-dup-sized) member×quality relation — qrep as
-    # MIN(CASE WHEN keep_quality THEN doc_id END) OVER cluster_rep — so
-    # memberq has a single consumer and needs neither the groupBy+join
-    # pair nor the blocking localCheckpoint the two-consumer form
-    # required (that checkpoint ran the corpus quality scan as its own
-    # job at build time; the window form folds everything into the main
-    # decisions job — A/B'd row-equal, 1.64 -> 1.43 s min-of-4 at sf0.1).
-    # The window partition is cluster-sized (skew bound = largest
-    # near-dup cluster), same as the groupBy it replaces.
-    memberq = clusters.join(
-        base.select("doc_id", "keep_quality"), "doc_id", "left"
+    return _curate_decisions(
+        base.join(gopher, "doc_id", "left").join(dsir, "doc_id", "left"),
+        base.select("doc_id", "keep_quality"),
+        clusters,
+        doc_bytes,
     )
+
+
+def _curate_decisions(
+    signals: DataFrame, quality: DataFrame, clusters: DataFrame, doc_bytes: int
+) -> DataFrame:
+    """The curation decision rule, shared by the one-shot and incremental
+    paths: ``signals`` (doc_id, source, lang, n_tokens, keep_quality,
+    gopher_keep, logw_nats, more_target_like — one row per document) plus
+    the near-dup ``clusters`` (doc_id, cluster_rep) → the 10-column
+    decisions table. ``quality`` is (doc_id, keep_quality): the one-shot
+    path passes the gate projection itself rather than a projection of
+    ``signals``, so the survivor pick does not drag the gopher/DSIR joins
+    along.
+
+    Quality-aware survivor per cluster: min doc_id among quality-passing
+    members (fallback: the plain cluster_rep when none pass). clusters is
+    near-dup-proportional, so the flags join is size-gated on
+    ``doc_bytes``. r10 optimization: the survivor pick is ONE window over
+    the (near-dup-sized) member×quality relation — qrep as
+    MIN(CASE WHEN keep_quality THEN doc_id END) OVER cluster_rep — so
+    memberq has a single consumer and needs neither the groupBy+join pair
+    nor the blocking localCheckpoint the two-consumer form required (that
+    checkpoint ran the corpus quality scan as its own job at build time;
+    the window form folds everything into the main decisions job — A/B'd
+    row-equal, 1.64 -> 1.43 s min-of-4 at sf0.1). The window partition is
+    cluster-sized (skew bound = largest near-dup cluster), same as the
+    groupBy it replaces."""
+    from .functions.scale import broadcast_if_small
+
+    memberq = clusters.join(quality, "doc_id", "left")
     qrep_w = F.min(F.when(F.col("keep_quality"), F.col("doc_id"))).over(
         Window.partitionBy("cluster_rep")
     )
@@ -210,25 +229,21 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_dup"
         ),
     )
-    return (
-        base.join(gopher, "doc_id", "left")
-        .join(dsir, "doc_id", "left")
-        .join(broadcast_if_small(member_flags, doc_bytes), "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_tokens",
-            F.coalesce("keep_quality", F.lit(False)).alias("keep_quality"),
-            (~F.coalesce("is_dup", F.lit(False))).alias("keep_dedup"),
-            "gopher_keep",
-            "logw_nats",
-            "more_target_like",
-            (
-                F.coalesce("keep_quality", F.lit(False))
-                & ~F.coalesce("is_dup", F.lit(False))
-            ).alias("keep"),
-        )
+    keep_quality = F.coalesce("keep_quality", F.lit(False))
+    is_dup = F.coalesce("is_dup", F.lit(False))
+    return signals.join(
+        broadcast_if_small(member_flags, doc_bytes), "doc_id", "left"
+    ).select(
+        "doc_id",
+        "source",
+        "lang",
+        "n_tokens",
+        keep_quality.alias("keep_quality"),
+        (~is_dup).alias("keep_dedup"),
+        "gopher_keep",
+        "logw_nats",
+        "more_target_like",
+        (keep_quality & ~is_dup).alias("keep"),
     )
 
 
@@ -355,11 +370,12 @@ def write_curated_corpus_incremental(
     shingled/min-hashed/probed, but the discovered near-dup edges
     accumulate, so the keep decision is re-derived each batch from the
     FULL edge set with the identical cluster + quality-aware-survivor
-    rule. A later batch can therefore retract an earlier keep (a bridge
-    doc can merge two previously separate clusters) — which is precisely
-    why each batch publishes a full SNAPSHOT version instead of appending
-    to a live corpus: readers move from v{n} to v{n+1} atomically and
-    never see the retraction applied in place.
+    rule (``_cc_labels`` + ``_curate_decisions``, the one-shot path's own
+    helpers). A later batch can therefore retract an earlier keep (a
+    bridge doc can merge two previously separate clusters) — which is
+    precisely why each batch publishes a full SNAPSHOT version instead of
+    appending to a live corpus: readers move from v{n} to v{n+1}
+    atomically and never see the retraction applied in place.
 
     State under ``out/state/`` (all append-only parquet):
     ``docagg`` (minhash windows + shingle arrays for exact-Jaccard
@@ -368,26 +384,55 @@ def write_curated_corpus_incremental(
     proportional, the small relation everything is re-derived from),
     ``signals`` (per-doc gate verdicts + recorded gopher/DSIR signals).
 
-    Scale shape: the per-batch heavy work (shingle, hash, bucket probe
-    with the batch side broadcast) is batch-proportional; the cross-batch
-    recompute touches only edges (≪ docs) plus one edge-set cc
-    (_cc_hybrid, O(log n) rounds) and a broadcast-gated flags join.
-    Gopher is doc-local and batch-filtered; the DSIR signal is corpus-
-    normalized by definition, so it reads the full table (recorded
-    signal, not a gate — at real scale a pipeline would snapshot its raw
-    unigram stats in state rather than rescan; the gate columns this
-    function's keep derives from are batch-bounded)."""
+    Scale shape: the batch is a small dependency graph whose nodes each
+    run once, independent nodes concurrently on a two-thread pool (the
+    pool threads inherit the caller's job group, tags and local
+    properties, so a job-group cancel or per-group job count covers the
+    whole batch):
+
+    - A: the batch's shingle/MinHash aggregate, built once and
+      checkpointed, feeds the delta probe (bucket join with the batch
+      side broadcast, exact-Jaccard verify) whose pairs append straight
+      to ``edges``;
+    - B, concurrent with A: the per-doc signals append (quality gate,
+      Gopher, DSIR);
+    - after A: the ``docagg``/``members`` appends from the same
+      checkpointed aggregate — never earlier, because the probe reads
+      those directories as the index;
+    - after A and B: the snapshot — component labels over the full edge
+      set through ``_cc_labels`` with the edge count read from parquet
+      footers (driver union-find below ``_CC_DRIVER_PAIRS``, no probe
+      job; ``_cc_hybrid`` above it), the window survivor pick, the
+      decisions write with ``kept`` observed during the write, then the
+      corpus write;
+    - last, on the calling thread, ``publish_version`` — a published
+      version always has complete state behind it, and a failed node
+      publishes nothing.
+
+    Everything per batch is batch-proportional except the snapshot, which
+    touches only edges (≪ docs), the per-doc signal rows and a
+    broadcast-gated flags join. Gopher is doc-local and batch-filtered;
+    the DSIR signal is corpus-normalized by definition, so it reads the
+    full table (recorded signal, not a gate — at real scale a pipeline
+    would snapshot its raw unigram stats in state rather than rescan; the
+    gate columns this function's keep derives from are batch-bounded).
+    Summary counts come from parquet footers and the write's Observation:
+    no count jobs."""
     import uuid
+    from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation
 
-    from .functions.neardup_index import _mh_shingles_cte, minhash_delta_pairs
+    from .functions.neardup_index import (
+        _index_session_confs,
+        _mh_shingles_cte,
+        minhash_delta_pairs,
+    )
     from .functions.scale import broadcast_if_small
     from .queries import llm_pipeline as lp
     from .queries.corpus_ext import gopher_rules
     from .queries.llm_pipeline import (
         _SPARK_D,
-        _cc_hybrid,
         _doc_quality_gate_sql,
         _parquet_rows,
         _spark_docs,
@@ -397,6 +442,9 @@ def write_curated_corpus_incremental(
     from .sources import load, table_rows
 
     fast_commit(spark)
+    # set before any branch plans, so the concurrent branches all plan
+    # under the posture the probe leaves set
+    _index_session_confs(spark)
     d = _SPARK_D
     lp._register_docs(spark, sf_dir)
     state = os.path.join(out, "state")
@@ -404,156 +452,155 @@ def write_curated_corpus_incremental(
         n: os.path.join(state, n)
         for n in ("docagg", "members", "edges", "signals")
     }
-    have_state = os.path.exists(paths["signals"])
+    # members is appended after docagg, so it marks a complete index pair
+    have_index = os.path.exists(paths["members"])
+    edges_before = (
+        _parquet_rows(paths["edges"]) if os.path.exists(paths["edges"]) else 0
+    )
     tag = uuid.uuid4().hex[:12]
 
-    # --- index views for the delta probe: accumulated state, or the
-    # schema-exact EMPTY relation on the first batch (WHERE FALSE keeps
-    # every column/type identical to the real aggregate without a
-    # hand-maintained schema string)
-    dagg_v, mem_v = f"_inc_dagg_{tag}", f"_inc_mem_{tag}"
-    if have_state:
+    # --- index views for the delta probe: the accumulated state (the
+    # first batch's empty index is made in the probe, from the batch
+    # aggregate's schema)
+    dagg_v, mem_v, bd_v = (f"_inc_{n}_{tag}" for n in ("dagg", "mem", "bd"))
+    if have_index:
         spark.read.parquet(paths["docagg"]).createOrReplaceTempView(dagg_v)
         spark.read.parquet(paths["members"]).createOrReplaceTempView(mem_v)
-    else:
-        # "doc_id < 0" (never true) instead of FALSE: Spark folds a
-        # literal-FALSE subquery to a one-column dummy relation and the
-        # shingle CTE's 5-column alias stops resolving
-        spark.sql(
-            _mh_shingles_cte("doc_id < 0") + lp._mh_docagg_sql(d)
-        ).createOrReplaceTempView(dagg_v)
-        spark.sql(
-            f"SELECT doc_id, band, sig FROM ({lp._mh_sigs_sql(d, dagg_v)})"
-        ).createOrReplaceTempView(mem_v)
-
-    # --- delta-proportional dedup: new edges with >= 1 end in the batch
-    # (localCheckpoint: the relation is near-dup-tiny and is consumed by
-    # both the count and the state append — without it the whole probe
-    # re-executes per consumer)
-    new_edges = (
-        minhash_delta_pairs(spark, sf_dir, dagg_v, mem_v, batch_where)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
-    n_new_edges = new_edges.count()
-
-    # --- batch-proportional state append
-    batch_dagg = spark.sql(
-        _mh_shingles_cte(batch_where) + lp._mh_docagg_sql(d)
-    ).localCheckpoint()
-    bd_v = f"_inc_bd_{tag}"
-    batch_dagg.createOrReplaceTempView(bd_v)
-    batch_dagg.write.mode("append").parquet(paths["docagg"])
-    spark.sql(
-        f"SELECT doc_id, band, sig FROM ({lp._mh_sigs_sql(d, bd_v)})"
-    ).write.mode("append").parquet(paths["members"])
-    new_edges.write.mode("append").parquet(paths["edges"])
-
-    base = _spark_docs(
-        spark,
-        sf_dir,
-        f"""WITH g AS ({_doc_quality_gate_sql(d)})
-            SELECT doc_id, source, lang,
-                   lang_ok = 1 AND q_ok = 1 AS keep_quality
-            FROM g""",
-    ).where(batch_where)
-    # gopher is doc-local — the batch filter pushes through its projection
-    # to the scan, keeping the gate batch-proportional like base (dsir is
-    # corpus-normalized by definition and stays a full pass, as documented)
-    gopher = (
-        gopher_rules(spark, sf_dir)
-        .where(batch_where)
-        .select("doc_id", F.col("keep").alias("gopher_keep"))
-    )
-    dsir = dsir_weights(spark, sf_dir).select(
-        "doc_id", "n_tokens", "logw_nats", "more_target_like"
-    )
-    (
-        base.join(gopher, "doc_id", "left").join(dsir, "doc_id", "left")
-    ).write.mode("append").parquet(paths["signals"])
-
-    # --- full-snapshot decision recompute from the accumulated SMALL
-    # relations (edges + per-doc signal rows) — the identical rule
-    # curate_decisions_frame applies one-shot
-    # dropDuplicates(doc_id): makes an accidentally re-submitted batch
-    # harmless for the DECISION path (duplicate edge/member/docagg state
-    # rows are already absorbed by DISTINCT/cc downstream, but duplicate
-    # signal rows would duplicate decisions rows and MULTIPLY corpus rows
-    # through the kept-set join)
-    sig_all = spark.read.parquet(paths["signals"]).dropDuplicates(["doc_id"])
-    edges_all = spark.read.parquet(paths["edges"])
-    labels, _ = _cc_hybrid(edges_all.toDF("a", "b"))
-    clusters = labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")
-    )
-    memberq = clusters.join(
-        sig_all.select("doc_id", "keep_quality"), "doc_id", "left"
-    ).localCheckpoint()
-    qrep = (
-        memberq.where("keep_quality")
-        .groupBy("cluster_rep")
-        .agg(F.min("doc_id").alias("qrep"))
-    )
-    member_flags = memberq.join(qrep, "cluster_rep", "left").select(
-        "doc_id",
-        (F.col("doc_id") != F.coalesce("qrep", "cluster_rep")).alias("is_dup"),
-    )
-    doc_bytes = table_rows(sf_dir, "documents") * 32
-    decisions = (
-        sig_all.join(broadcast_if_small(member_flags, doc_bytes), "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_tokens",
-            F.coalesce("keep_quality", F.lit(False)).alias("keep_quality"),
-            (~F.coalesce("is_dup", F.lit(False))).alias("keep_dedup"),
-            "gopher_keep",
-            "logw_nats",
-            "more_target_like",
-            (
-                F.coalesce("keep_quality", F.lit(False))
-                & ~F.coalesce("is_dup", F.lit(False))
-            ).alias("keep"),
-        )
-    )
     dec_path = os.path.join(out, "decisions")
-    decisions.write.mode("overwrite").parquet(dec_path)
     corpus_path = os.path.join(out, "corpus")
-    kept = spark.read.parquet(dec_path).where("keep").select("doc_id")
-    corpus = load(spark, sf_dir, "documents").join(
-        broadcast_if_small(kept, doc_bytes), "doc_id"
-    )
-    corpus.write.mode("overwrite").partitionBy("source").parquet(corpus_path)
 
-    n_kept = spark.read.parquet(dec_path).where("keep").count()
+    def probe() -> DataFrame:  # A; returns the checkpointed batch aggregate
+        batch_dagg = spark.sql(
+            _mh_shingles_cte(batch_where) + lp._mh_docagg_sql(d)
+        ).localCheckpoint()
+        batch_dagg.createOrReplaceTempView(bd_v)
+        if not have_index:
+            # WHERE FALSE over the batch aggregate keeps every column/type
+            # of the real index without a hand-maintained schema string,
+            # and the optimizer folds it to an empty relation: the first
+            # probe scans nothing for its index side
+            batch_dagg.where("false").createOrReplaceTempView(dagg_v)
+            spark.sql(
+                f"SELECT doc_id, band, sig FROM ({lp._mh_sigs_sql(d, dagg_v)})"
+            ).createOrReplaceTempView(mem_v)
+        minhash_delta_pairs(
+            spark, sf_dir, dagg_v, mem_v, batch_where, delta_docagg=bd_v
+        ).select("doc_a", "doc_b").write.mode("append").parquet(paths["edges"])
+        return batch_dagg
+
+    def append_signals() -> None:  # B
+        base = _spark_docs(
+            spark,
+            sf_dir,
+            f"""WITH g AS ({_doc_quality_gate_sql(d)})
+                SELECT doc_id, source, lang,
+                       lang_ok = 1 AND q_ok = 1 AS keep_quality
+                FROM g""",
+        ).where(batch_where)
+        # gopher is doc-local — the batch filter pushes through its
+        # projection to the scan, keeping the gate batch-proportional like
+        # base (dsir is corpus-normalized by definition and stays a full
+        # pass, as documented)
+        gopher = (
+            gopher_rules(spark, sf_dir)
+            .where(batch_where)
+            .select("doc_id", F.col("keep").alias("gopher_keep"))
+        )
+        dsir = dsir_weights(spark, sf_dir).select(
+            "doc_id", "n_tokens", "logw_nats", "more_target_like"
+        )
+        signals = base.join(gopher, "doc_id", "left").join(dsir, "doc_id", "left")
+        signals.write.mode("append").parquet(paths["signals"])
+
+    def append_index(batch_dagg: DataFrame) -> None:  # after A
+        batch_dagg.write.mode("append").parquet(paths["docagg"])
+        spark.sql(
+            f"SELECT doc_id, band, sig FROM ({lp._mh_sigs_sql(d, bd_v)})"
+        ).write.mode("append").parquet(paths["members"])
+
+    def snapshot() -> int:  # after A and B; returns the kept count
+        # dropDuplicates(doc_id): makes an accidentally re-submitted batch
+        # harmless for the DECISION path (duplicate edge/member/docagg
+        # state rows are already absorbed by DISTINCT/cc downstream, but
+        # duplicate signal rows would duplicate decisions rows and
+        # MULTIPLY corpus rows through the kept-set join)
+        sig_all = spark.read.parquet(paths["signals"]).dropDuplicates(["doc_id"])
+        labels = lp._cc_labels(
+            spark,
+            spark.read.parquet(paths["edges"]),
+            n_pairs=_parquet_rows(paths["edges"]),
+        )
+        clusters = labels.select(
+            F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")
+        )
+        doc_bytes = table_rows(sf_dir, "documents") * 32
+        obs = Observation("curate_incremental")
+        _curate_decisions(
+            sig_all, sig_all.select("doc_id", "keep_quality"), clusters, doc_bytes
+        ).observe(
+            obs, F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_kept")
+        ).write.mode("overwrite").parquet(dec_path)
+        kept = spark.read.parquet(dec_path).where("keep").select("doc_id")
+        corpus = load(spark, sf_dir, "documents").join(
+            broadcast_if_small(kept, doc_bytes), "doc_id"
+        )
+        corpus.write.mode("overwrite").partitionBy("source").parquet(corpus_path)
+        return int(obs.get["n_kept"] or 0)
+
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            a = _submit_inheriting(pool, spark, probe)
+            b = _submit_inheriting(pool, spark, append_signals)
+            batch_dagg = a.result()
+            index = _submit_inheriting(pool, spark, append_index, batch_dagg)
+            b.result()
+            n_kept = _submit_inheriting(pool, spark, snapshot).result()
+            index.result()
+    finally:
+        for v in (dagg_v, mem_v, bd_v):
+            spark.catalog.dropTempView(v)
+
     version = None
-    if publish_root is not None:
-        if n_kept:
-            version = publish_version(
-                spark,
-                spark.read.parquet(corpus_path),
-                publish_root,
-                partition_by=("source",),
-            )
+    if publish_root is not None and n_kept:
         # an all-dropped snapshot writes no partitioned part files — there
         # is nothing to promote and the prior version must stay committed
         # (the one-shot CLI path's guard, applied here so a degenerate
         # batch can't crash the stream and force a state-duplicating
         # replay)
+        version = publish_version(
+            spark,
+            spark.read.parquet(corpus_path),
+            publish_root,
+            partition_by=("source",),
+        )
 
-    for v in (dagg_v, mem_v, bd_v):
-        spark.catalog.dropTempView(v)
+    edges_total = _parquet_rows(paths["edges"])
     rows = [
         ("docs_processed_total", _parquet_rows(paths["signals"])),
-        ("batch_new_edges", n_new_edges),
-        ("edges_total", _parquet_rows(paths["edges"])),
+        ("batch_new_edges", edges_total - edges_before),
+        ("edges_total", edges_total),
         ("kept", n_kept),
         ("decisions_rows_written", _parquet_rows(dec_path)),
         ("corpus_rows_written", _parquet_rows(corpus_path)),
         ("published_version", -1 if version is None else version),
     ]
     return spark.createDataFrame(rows, "stage string, n long")
+
+
+def _submit_inheriting(pool, spark: SparkSession, fn, *args):
+    """``pool.submit(fn, *args)`` with the CALLING thread's Spark job
+    group, job tags and local properties applied on the pool thread
+    (pyspark.inheritable_thread_target, captured here, per task: each
+    task gets its own copy of the properties, so concurrent tasks never
+    share one mutable property set). Without it, jobs a pool thread
+    starts belong to no group — a job-group cancel or a per-group job
+    count would miss them."""
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
+    # outside pinned-thread mode there is nothing to inherit and the
+    # call hands the session back instead of a decorator
+    return pool.submit(inherit(fn) if callable(inherit) else fn, *args)
 
 
 def curate_ingest_stream(
