@@ -274,16 +274,12 @@ def build_embed_index(
     adapts to corpus size exactly as the session form does (_nd_bits), so
     indexed results match the registry query at every scale. Returns
     (table name, bits)."""
-    import os
-
     from ..queries import llm_pipeline as lp
-    from ..sources import load
+    from ..sources import load, table_rows
 
     _index_session_confs(spark)
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    bits = lp._nd_bits(
-        lp._parquet_rows(os.path.join(sf_dir, "embeddings.parquet"))
-    )
+    bits = lp._nd_bits(table_rows(sf_dir, "embeddings"))
     members_t = f"{prefix}_members_b"
     members = spark.sql(
         f"""

@@ -54,7 +54,6 @@ from .llm_pipeline import (
     _dual,
     _hex2int,
     _indexed,
-    _parquet_rows,
     _register_docs,
     _spark_docs,
 )
@@ -776,13 +775,11 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation materializes once per session (the artifact a pipeline would
     persist) and the pair join + verify read only it and the candidates'
     embeddings."""
-    import os as _os
-
     from ..functions.materialize import materialized
-    from ..sources import load
+    from ..sources import load, table_rows
 
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    k = _sd_k(_parquet_rows(_os.path.join(sf_dir, "embeddings.parquet")))
+    k = _sd_k(table_rows(sf_dir, "embeddings"))
     if k > _SD_K:
         # past gate scales the n·dims·K join would dominate — use the
         # blocked-numpy Arrow kernel (bit-identical distances; see
@@ -1501,13 +1498,13 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         _VOCAB_BCAST_DOCS_BYTES,
         _XENT_SPARK,
         _XENT_SPARK_SHUFFLE,
-        _docs_disk_bytes,
     )
+    from ..sources.tables import table_bytes
 
     _register_docs(spark, sf_dir)
     xent_sql = (
         _XENT_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
+        if table_bytes(sf_dir, "documents") < _VOCAB_BCAST_DOCS_BYTES
         else _XENT_SPARK_SHUFFLE
     )
     view = f"_ppl_xent_{uuid.uuid4().hex[:12]}"
@@ -2230,7 +2227,7 @@ _SPANS_SPARK_AGG = _dedup_spans_sql(_SPARK_D, agg_form=True)
 # Above this many documents (parquet footer count, no job — the
 # sliding_agg precedent) the Spark side switches from the run-keyed
 # window to the agg+SHUFFLE_HASH-join form. Measured (interleaved
-# min-of-3, scripts/spans_ab_r08.py, full-plan eval; hot = one 8-token
+# min-of-3 in one session, full-plan eval; hot = one 8-token
 # block carried by 80% of docs, the aac4508 stress shape at scale):
 #   sf1  uniform (50k docs):   window 1.51 s   agg 2.18 s
 #   sf1  hot     (50k docs):   window 2.57 s   agg 3.54 s

@@ -18,8 +18,6 @@ Design rules for scale:
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,6 +25,7 @@ from ..functions.detrand import lcg_uniform_sql
 from ..functions.materialize import materialized
 from ..functions.spread import register_spread_view
 from ..sources import load
+from ..sources.tables import table_bytes, table_rows
 from . import register
 
 # --------------------------------------------------------------------------
@@ -97,24 +96,6 @@ def _indexed(spark: SparkSession, key: str, sql: str) -> DataFrame:
     session-keyed, thread-safe; see functions/materialize.py for the
     staleness/catalog assumptions."""
     return materialized(spark, key, lambda: spark.sql(sql))
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footer metadata — driver-side, no Spark job.
-    Handles a single file, a flat Spark-written dataset directory, and a
-    hive-partitioned tree (recursive walk) — the one footer-count helper
-    for derived datasets (sources.table_rows stays the fixture-table
-    variant with its fingerprint memo)."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(os.path.join(root, f)).num_rows
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    return pq.read_metadata(path).num_rows
 
 
 def _register_docs(spark: SparkSession, sf_dir: str) -> None:
@@ -1243,8 +1224,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from ..sources import table_rows
-
     # full 3-col pair manifest (jaccard included) under ONE session key —
     # source_overlap reuses the same materialized relation, so the two
     # consumers must agree on the schema
@@ -1325,7 +1304,6 @@ def neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from ..functions.scale import broadcast_if_small
-    from ..sources import table_rows
 
     clusters = dedup_clusters(spark, sf_dir)
     drops = (
@@ -2198,7 +2176,7 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN index writes to storage. Band width adapts to corpus size (see
     _nd_bits) — the parquet footer row count is read driver-side, no job."""
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    bits = _nd_bits(_parquet_rows(os.path.join(sf_dir, "embeddings.parquet")))
+    bits = _nd_bits(table_rows(sf_dir, "embeddings"))
     _indexed(
         spark,
         f"nd_sigs|{bits}|{sf_dir}",
@@ -2306,52 +2284,18 @@ _TFIDF_SPARK_SHUFFLE = _tfidf_spark("")
 # CORPUS-proportional — Heaps-law sub-linear in practice, but unbounded in
 # principle (a 100 TB corpus can carry 10⁹+ distinct terms), the same
 # hazard class as the fact-proportional revenue bridge. The hint is
-# therefore gated on the documents table's on-disk footprint (the cheap
-# upper-bound proxy for vocab volume): under the cap, broadcast skips both
-# full-relation exchanges; over it, the hint is dropped and Catalyst plans
-# a term-keyed shuffle join of the two already-aggregated relations — the
-# shape that cannot OOM an executor at any vocab size. Measured at the
+# therefore gated on the documents table's on-disk footprint
+# (sources.tables.table_bytes, the cheap upper-bound proxy for vocab
+# volume): under the cap, broadcast skips both full-relation exchanges;
+# over it, the hint is dropped and Catalyst plans a term-keyed shuffle
+# join of the two already-aggregated relations — the shape that cannot
+# OOM an executor at any vocab size. Measured at the
 # sf100 ladder tier (934 MB docs, ~5M-term vocab): broadcast still wins
 # on this box (tfidf 56 s vs 66 s, xent 36 s vs 41 s), so the gate sits
 # at 1 GiB — just past the largest tier we can measure, before the
 # vocab relation's driver-collect approaches maxResultSize. The shuffle
 # variant is pinned result-equal at gate scale in tests.
 _VOCAB_BCAST_DOCS_BYTES = 1 << 30
-
-
-_DOCS_BYTES_CACHE: dict[str, int] = {}
-
-
-def _docs_disk_bytes(sf_dir: str) -> int:
-    """On-disk documents footprint for the vocab-broadcast gate. Memoized
-    per sf_dir (a bench loop builds the three gated queries repeatedly and
-    the fixture is immutable within a session; a rewritten dataset changes
-    the top-level stat rarely enough that the gate — a plan-strategy knob,
-    not a correctness input — doesn't need rewrite invalidation)."""
-    n = _DOCS_BYTES_CACHE.get(sf_dir)
-    if n is not None:
-        return n
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            # Recurse: hive-partitioned layouts nest part files, and a
-            # flat scandir would sum 0 bytes — read as "tiny corpus" and
-            # keeping the broadcast-vocab plan at any real size. A dataset
-            # dir with zero visible part files is UNKNOWN, not empty.
-            n = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(p)
-                for f in files
-                if f.endswith(".parquet")
-            )
-            if n == 0:
-                n = 1 << 62
-        else:
-            n = os.stat(p).st_size
-    except OSError:
-        n = 1 << 62  # unknown: treat as huge, keep the shuffle-safe plan
-    _DOCS_BYTES_CACHE[sf_dir] = n
-    return n
 
 
 @register("tfidf_topterms", _TFIDF_DUCK)
@@ -2362,10 +2306,12 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(.,6)+0.0 per the libm (ln) discipline and ranked on the ROUNDED
     value with the term string as tiebreak, so ordering is
     engine-independent. The dfr broadcast is size-gated (see
-    _VOCAB_BCAST_DOCS_BYTES)."""
+    _VOCAB_BCAST_DOCS_BYTES) on ``sources.tables.table_bytes``, which
+    owns how the documents footprint is walked, memoized against a
+    rewrite, and read when unknown (as huge: the shuffle-safe plan)."""
     sql = (
         _TFIDF_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
+        if table_bytes(sf_dir, "documents") < _VOCAB_BCAST_DOCS_BYTES
         else _TFIDF_SPARK_SHUFFLE
     )
     return _spark_docs(spark, sf_dir, sql)
@@ -2681,7 +2627,7 @@ def unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-gated (see _VOCAB_BCAST_DOCS_BYTES)."""
     sql = (
         _XENT_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
+        if table_bytes(sf_dir, "documents") < _VOCAB_BCAST_DOCS_BYTES
         else _XENT_SPARK_SHUFFLE
     )
     return _spark_docs(spark, sf_dir, sql)
@@ -2789,7 +2735,7 @@ def bigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 folded vocab-side, broadcasts back onto the unmoved tf12."""
     sql = (
         _BX_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
+        if table_bytes(sf_dir, "documents") < _VOCAB_BCAST_DOCS_BYTES
         else _BX_SPARK_SHUFFLE
     )
     return _spark_docs(spark, sf_dir, sql)
@@ -3443,7 +3389,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines and partitionings."""
     sql = (
         _DSIR_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
+        if table_bytes(sf_dir, "documents") < _VOCAB_BCAST_DOCS_BYTES
         else _DSIR_SPARK_SHUFFLE
     )
     return _spark_docs(spark, sf_dir, sql)
@@ -3514,8 +3460,6 @@ def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle twin expresses the same K via a scalar COUNT over the
     doc-grain relation, fine in-process."""
     import uuid
-
-    from ..sources import table_rows
 
     k = -(-table_rows(sf_dir, "documents") // _DSIR_KEEP_DEN)
     dsir = dsir_weights(spark, sf_dir)

@@ -154,46 +154,24 @@ _SMALL_SHUFFLE = "8"
 _TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 _MAX_SHUFFLE = 4096
 
-_dir_bytes: dict[str, int] = {}
-
-
-def _input_bytes(sf_dir: str) -> int:
-    b = _dir_bytes.get(sf_dir)
-    if b is None:
-        try:
-            b = 0
-            for e in os.scandir(sf_dir):
-                if not e.name.endswith(".parquet"):
-                    continue
-                if e.is_file():
-                    b += e.stat().st_size
-                elif e.is_dir():
-                    # Spark-written dataset DIRECTORY (part-*.parquet inside).
-                    # Counting only flat files made a 17 GB directory fixture
-                    # read as ~0 bytes -> small posture (8 partitions, AQE
-                    # off) -> asof_lag 158 s instead of 19 s at sf100.
-                    with os.scandir(e.path) as it:
-                        b += sum(
-                            p.stat().st_size
-                            for p in it
-                            if p.is_file() and p.name.endswith(".parquet")
-                        )
-        except OSError:
-            b = _SMALL_INPUT_BYTES  # unknown input: keep cluster posture
-        _dir_bytes[sf_dir] = b
-    return b
-
 
 def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
-    """Size shuffle DOP + AQE to the input footprint (driver-side stat).
+    """Size shuffle DOP + AQE to the input footprint (driver-side stat:
+    ``sources.tables.input_bytes``, which owns the walk, the memo and the
+    unknown-input rule for every on-disk dataset fact).
 
-    Called by the query registry before each build; the dir footprint is
-    memoized per sf_dir and conf writes happen only on posture CHANGE, so
-    repeat builds cost two dict hits. Both branches set their knobs
+    Called by the query registry before each build; the footprint is
+    memoized per dataset and conf writes happen only on posture CHANGE, so
+    repeat builds cost a few stat calls. Both branches set their knobs
     explicitly (restoring the session's original posture, kept in its
     state as ``"posture"``, in the large branch) so one session can serve
-    mixed input scales — e.g. the sf0.001 gate then the sf10 ladder."""
-    nbytes = _input_bytes(sf_dir)
+    mixed input scales — e.g. the sf0.001 gate then the sf10 ladder. An
+    unreadable sf_dir keeps the configured posture."""
+    from .sources.tables import UNKNOWN, input_bytes
+
+    nbytes = input_bytes(sf_dir)
+    if nbytes >= UNKNOWN:
+        nbytes = _SMALL_INPUT_BYTES  # unknown input: keep configured posture
     small = nbytes < _SMALL_INPUT_BYTES
     state = session_state(spark)
     if "posture" not in state:

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .dsl.registry import equations
 from .queries.dsl import _parsed_edges
+from .sources.tables import parquet_rows, table_rows
 
 
 def write_series_csv(df: DataFrame, path: str) -> None:
@@ -118,7 +119,6 @@ def write_plot_bundle(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from .queries.events_ext import missing_pattern
-    from .queries.llm_pipeline import _parquet_rows
     from .queries.relational import sampling_hist
     from .session import fast_commit
 
@@ -129,18 +129,22 @@ def write_plot_bundle(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
         "missing_pattern": missing_pattern(spark, sf_dir),
     }
 
-    def _write(item):
+    def _write(name, df):
         # Spark job submission is thread-safe; the three writes are
         # independent jobs, so submitting them concurrently lets the
         # scheduler interleave their stages instead of serializing three
-        # write-job latencies (bundle wall time ≈ the slowest frame).
-        name, df = item
+        # write-job latencies (bundle wall time ≈ the slowest frame). Each
+        # runs in the caller's job group (_submit_inheriting).
         path = os.path.join(out, f"frame={name}")
         df.write.mode("overwrite").parquet(path)
-        return name, _parquet_rows(path)
+        return name, parquet_rows(path)
 
     with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-        counts = list(pool.map(_write, frames.items()))
+        futures = [
+            _submit_inheriting(pool, spark, _write, name, df)
+            for name, df in frames.items()
+        ]
+        counts = [f.result() for f in futures]
     return spark.createDataFrame(counts, "frame string, n_rows long")
 
 
@@ -166,7 +170,6 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_clusters,
         dsir_weights,
     )
-    from .sources import table_rows
 
     base = _spark_docs(
         spark,
@@ -288,9 +291,7 @@ def write_curated_corpus(spark: SparkSession, sf_dir: str, out: str) -> DataFram
     Returns a (stage, n) summary frame with footer-verified written
     counts."""
     from .functions.scale import broadcast_if_small
-    from .queries.llm_pipeline import _parquet_rows
     from .session import fast_commit
-    from .sources import table_rows
 
     from pyspark.sql import Observation
 
@@ -341,8 +342,8 @@ def write_curated_corpus(spark: SparkSession, sf_dir: str, out: str) -> DataFram
         ("dup_dropped", int(agg["n_dup_dropped"] or 0)),
         ("kept", int(agg["n_kept"] or 0)),
         ("tokens_kept", int(agg["n_tokens_kept"] or 0)),
-        ("decisions_rows_written", _parquet_rows(dec_path)),
-        ("corpus_rows_written", _parquet_rows(corpus_path)),
+        ("decisions_rows_written", parquet_rows(dec_path)),
+        ("corpus_rows_written", parquet_rows(corpus_path)),
         ("decisions_fingerprint", int(agg["fingerprint"] or 0)),
     ]
     return spark.createDataFrame(rows, "stage string, n long")
@@ -434,12 +435,11 @@ def write_curated_corpus_incremental(
     from .queries.llm_pipeline import (
         _SPARK_D,
         _doc_quality_gate_sql,
-        _parquet_rows,
         _spark_docs,
         dsir_weights,
     )
     from .session import fast_commit
-    from .sources import load, table_rows
+    from .sources import load
 
     fast_commit(spark)
     # set before any branch plans, so the concurrent branches all plan
@@ -455,7 +455,7 @@ def write_curated_corpus_incremental(
     # members is appended after docagg, so it marks a complete index pair
     have_index = os.path.exists(paths["members"])
     edges_before = (
-        _parquet_rows(paths["edges"]) if os.path.exists(paths["edges"]) else 0
+        parquet_rows(paths["edges"]) if os.path.exists(paths["edges"]) else 0
     )
     tag = uuid.uuid4().hex[:12]
 
@@ -528,7 +528,7 @@ def write_curated_corpus_incremental(
         labels = lp._cc_labels(
             spark,
             spark.read.parquet(paths["edges"]),
-            n_pairs=_parquet_rows(paths["edges"]),
+            n_pairs=parquet_rows(paths["edges"]),
         )
         clusters = labels.select(
             F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")
@@ -574,14 +574,14 @@ def write_curated_corpus_incremental(
             partition_by=("source",),
         )
 
-    edges_total = _parquet_rows(paths["edges"])
+    edges_total = parquet_rows(paths["edges"])
     rows = [
-        ("docs_processed_total", _parquet_rows(paths["signals"])),
+        ("docs_processed_total", parquet_rows(paths["signals"])),
         ("batch_new_edges", edges_total - edges_before),
         ("edges_total", edges_total),
         ("kept", n_kept),
-        ("decisions_rows_written", _parquet_rows(dec_path)),
-        ("corpus_rows_written", _parquet_rows(corpus_path)),
+        ("decisions_rows_written", parquet_rows(dec_path)),
+        ("corpus_rows_written", parquet_rows(corpus_path)),
         ("published_version", -1 if version is None else version),
     ]
     return spark.createDataFrame(rows, "stage string, n long")
@@ -694,9 +694,6 @@ def publish_version(
     too (`_next_version`), so the next publish writes v{n+1} instead of
     colliding with the orphan — the write path can never wedge; the
     orphan is garbage a retention job may remove."""
-    import json
-
-    from .queries.llm_pipeline import _parquet_rows
     from .session import fast_commit
 
     os.makedirs(root, exist_ok=True)
@@ -710,10 +707,22 @@ def publish_version(
     writer.parquet(staging)
     os.rename(staging, final)
     _fsync_dir(root)  # version rename durable BEFORE the pointer names it
+    _commit_pointer(root, version)
+    return version
+
+
+def _commit_pointer(root: str, version: int) -> None:
+    """Point ``root``'s ``LATEST`` at ``v{version}`` — the one commit step
+    of publish and rollback: write {version, path, n_rows} (rows from the
+    version's footers) to a tmp file, fsync it, ``os.replace`` it over the
+    pointer (atomic on POSIX), then fsync the directory so the swap is
+    durable."""
+    import json
+
     pointer = {
         "version": version,
         "path": f"v{version}",
-        "n_rows": _parquet_rows(final),
+        "n_rows": parquet_rows(os.path.join(root, f"v{version}")),
     }
     tmp_ptr = os.path.join(root, f"_tmp_{_LATEST}_{os.getpid()}")
     with open(tmp_ptr, "w") as f:
@@ -722,7 +731,6 @@ def publish_version(
         os.fsync(f.fileno())
     os.replace(tmp_ptr, os.path.join(root, _LATEST))
     _fsync_dir(root)
-    return version
 
 
 def _fsync_dir(path: str) -> None:
@@ -798,25 +806,10 @@ def rollback(root: str, version: int) -> None:
     pointer-swap discipline as publish; refuses a version whose directory
     is missing. The abandoned newer versions stay on disk for forensics
     until pruned."""
-    import json
-
     target = os.path.join(root, f"v{version}")
     if not os.path.isdir(target):
         raise FileNotFoundError(f"no published version directory {target}")
-    from .queries.llm_pipeline import _parquet_rows
-
-    pointer = {
-        "version": version,
-        "path": f"v{version}",
-        "n_rows": _parquet_rows(target),
-    }
-    tmp_ptr = os.path.join(root, f"_tmp_{_LATEST}_{os.getpid()}")
-    with open(tmp_ptr, "w") as f:
-        f.write(json.dumps(pointer))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_ptr, os.path.join(root, _LATEST))
-    _fsync_dir(root)
+    _commit_pointer(root, version)
 
 
 def prune_versions(
@@ -906,10 +899,8 @@ def write_corpus_report(spark: SparkSession, sf_dir: str, out: str) -> DataFrame
     preserved); the profiles are language/source-cardinality-bounded."""
     from .queries.corpus_ext import length_percentiles, ngram_novelty
     from .queries.corpus_mining import gopher_repetition, tokenizer_stats
-    from .queries.llm_pipeline import _parquet_rows
     from .queries.corpus_ext import gopher_rules
     from .session import fast_commit
-    from .sources import table_rows
 
     fast_commit(spark)
     shapes = gopher_rules(spark, sf_dir).select(
@@ -950,13 +941,13 @@ def write_corpus_report(spark: SparkSession, sf_dir: str, out: str) -> DataFrame
     ).collect()[0]
     rows = [
         ("docs_in", table_rows(sf_dir, "documents")),
-        ("docs_audited", _parquet_rows(audit_path)),
+        ("docs_audited", parquet_rows(audit_path)),
         ("clean", int(agg["n_clean"] or 0)),
         ("shape_fail", int(agg["n_shape_fail"] or 0)),
         ("repetition_fail", int(agg["n_repetition_fail"] or 0)),
         ("novel_runs", int(agg["novel_runs"] or 0)),
-        ("lang_rows_written", _parquet_rows(lang_path)),
-        ("length_rows_written", _parquet_rows(len_path)),
+        ("lang_rows_written", parquet_rows(lang_path)),
+        ("length_rows_written", parquet_rows(len_path)),
         ("audit_fingerprint", int(agg["fingerprint"] or 0)),
     ]
     return spark.createDataFrame(rows, "stage string, n long")

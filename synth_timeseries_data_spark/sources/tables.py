@@ -1,9 +1,27 @@
-"""Fixture-table loaders.
+"""Fixture-table loaders and the engine's one reader of on-disk dataset facts.
 
 The driver materializes a TPC-H-ish star schema plus event/text/vector tables
 as one parquet file per table per scale factor (TESTDATA.md). Parquet scans
 get predicate pushdown + column pruning from Catalyst for free; callers should
 ``select`` only needed columns so ``ReadSchema`` stays narrow.
+
+Every size gate in the engine (the session posture, broadcast caps, the
+numpy-vs-SQL strategy gates, footer-verified write summaries) reads its
+driver-side facts about a parquet dataset from this module, under three
+rules:
+
+- **Recursive walk.** A dataset is a single file or a directory whose part
+  files may nest under hive ``key=value`` subdirectories at any depth; every
+  ``*.parquet`` file below it counts. A top-level-only listing reads a
+  partitioned dataset as 0 bytes/rows, which every gate takes for "tiny".
+- **Fingerprint memo.** ``table_rows``/``table_bytes``/``input_bytes`` are
+  memoized per path against ``_fingerprint`` (mtime and size, folding in a
+  directory's direct entries), so a dataset rewritten in place is measured
+  again. ``parquet_rows`` (written outputs) is not memoized.
+- **Unknown counts as huge.** An unreadable input, or a dataset directory
+  with no part files, measures ``UNKNOWN`` (2**62): the safe failure mode of
+  a size gate is the plan for big inputs (no broadcast hint, shuffle-safe
+  joins), never the one for tiny inputs.
 """
 
 from __future__ import annotations
@@ -78,12 +96,66 @@ def _fingerprint(path: str) -> tuple[float, int]:
     return mtime, size
 
 
-# Footer row-count memo: file metadata, not session state, so a plain module
-# dict keyed by PATH, storing (fingerprint, n) — a rewritten dataset gets a
-# new fingerprint and re-reads its footers, REPLACING its entry (keying by
-# (path, fingerprint) would strand one dead entry per rewrite forever in a
-# long generate→query session).
-_ROWS_CACHE: dict[str, tuple[tuple, int]] = {}
+UNKNOWN = 2**62
+
+# Dataset-stat memo: file metadata, not session state, so a plain module
+# dict keyed by (path, kind), storing (fingerprint, n) — a rewritten
+# dataset gets a new fingerprint and is measured again, REPLACING its entry
+# (keying by fingerprint would strand one dead entry per rewrite forever in
+# a long generate→query session).
+_STATS: dict[tuple[str, str], tuple[tuple, int]] = {}
+
+
+def _part_files(path: str) -> list[str]:
+    """The parquet part files of the dataset at ``path``: the file itself,
+    or every ``*.parquet`` file at any depth below a dataset directory."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _footer_rows(part: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(part).num_rows
+
+
+def _memo(path: str, kind: str, measure) -> int:
+    """``measure(path)`` memoized against ``_fingerprint(path)``; any
+    failure to measure is ``UNKNOWN``."""
+    fp = _fingerprint(path)
+    hit = _STATS.get((path, kind))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    try:
+        n = measure(path)
+    except Exception:
+        n = UNKNOWN
+    _STATS[(path, kind)] = (fp, n)
+    return n
+
+
+def _rows(path: str) -> int:
+    parts = _part_files(path)
+    # a dataset directory with no part files is UNKNOWN, not empty
+    return sum(map(_footer_rows, parts)) if parts else UNKNOWN
+
+
+def _bytes(path: str) -> int:
+    return sum(map(os.path.getsize, _part_files(path)))
+
+
+def parquet_rows(path: str) -> int:
+    """Exact row count of a parquet file or dataset directory from its
+    footers — driver-side, no Spark job, no memo. For outputs the engine
+    has just written (footer-verified write summaries): an unreadable path
+    raises, and a directory with no part files counts 0."""
+    return sum(map(_footer_rows, _part_files(path)))
 
 
 def table_rows(sf_dir: str, name: str) -> int:
@@ -98,42 +170,62 @@ def table_rows(sf_dir: str, name: str) -> int:
     The sf100 ladder caught exactly this: a 150M-row order bridge serialized
     past ``spark.driver.maxResultSize`` (1 GiB) and killed the job.
 
-    Unknown/unreadable footers return ``2**62`` (treat as huge): the safe
+    Unknown/unreadable footers return ``UNKNOWN`` (treat as huge): the safe
     failure mode is *no hint* — the plan stays correct and AQE can still
     broadcast at runtime from observed shuffle stats.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    fp = _fingerprint(path)
-    hit = _ROWS_CACHE.get(path)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    try:
-        import pyarrow.parquet as pq
+    return _memo(os.path.join(sf_dir, f"{name}.parquet"), "rows", _rows)
 
-        if os.path.isdir(path):
-            # Walk RECURSIVELY: hive-partitioned datasets nest part files
-            # under key=value subdirectories, and a top-level-only listing
-            # would report 0 rows — which downstream size gates read as
-            # "tiny, safe to broadcast", the exact failure the 2**62
-            # fail-safe exists to prevent.
-            parts = [
-                os.path.join(root, f)
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            ]
-            if not parts:
-                # A dataset directory with zero readable footers is
-                # UNKNOWN, not empty: keep the no-broadcast fail-safe.
-                n = 2**62
-            else:
-                n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        n = 2**62
-    _ROWS_CACHE[path] = (fp, n)
-    return n
+
+def table_bytes(sf_dir: str, name: str) -> int:
+    """On-disk bytes of a fixture table's part files (memoized; ``UNKNOWN``
+    when unreadable or an empty dataset directory) — the cheap upper-bound
+    proxy the vocab-broadcast gates read for corpus volume."""
+    n = _memo(os.path.join(sf_dir, f"{name}.parquet"), "bytes", _bytes)
+    # 0 bytes is a dataset directory with no part files: UNKNOWN, not empty
+    return n or UNKNOWN
+
+
+def input_bytes(sf_dir: str) -> int:
+    """On-disk footprint of ``sf_dir``: the part-file bytes of every
+    top-level ``*.parquet`` entry, each walked recursively and memoized
+    like ``table_bytes``; ``UNKNOWN`` when ``sf_dir`` or an entry is
+    unreadable. An empty dataset directory adds 0 — the footprint sums
+    what is there."""
+    try:
+        with os.scandir(sf_dir) as it:
+            entries = [e.path for e in it if e.name.endswith(".parquet")]
+    except OSError:
+        return UNKNOWN
+    return sum(_memo(e, "bytes", _bytes) for e in entries)
+
+
+def ts_unit(path: str) -> str:
+    """Physical unit of ``events.ts`` in the dataset's first part-file
+    footer: ``"ns"`` for INT64 TIMESTAMP(NANOS) or a plain INT64 (already
+    epoch-ns in this fixture lineage), else the timestamp's unit (``"us"``).
+    For readers that must declare a schema before reading (streaming)."""
+    import pyarrow.parquet as pq
+
+    ts_type = pq.read_schema(_part_files(path)[0]).field("ts").type
+    return getattr(ts_type, "unit", "ns")
+
+
+def with_ts_nanos(df: DataFrame) -> DataFrame:
+    """``df`` with ``ts`` as the engine-canonical epoch-ns BIGINT, whatever
+    timestamp type the reader produced: TIMESTAMP_NTZ via timezone-free
+    arithmetic (matching DuckDB's naive-as-UTC ``epoch_us`` in any session
+    timezone), TIMESTAMP via ``unix_micros``; a BIGINT is already nanos."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.TimestampNTZType):
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        )
+    elif isinstance(ts_type, T.TimestampType):
+        micros = F.unix_micros("ts")
+    else:
+        return df
+    return df.withColumn("ts", micros * F.lit(1000).cast("bigint"))
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -167,18 +259,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return cached
     df = spark.read.parquet(path)
     if name == "events":
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampdiff(MICROSECOND,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-                )
-                * F.lit(1000).cast("bigint"),
-            )
-        elif isinstance(ts_type, T.TimestampType):
-            df = df.withColumn("ts", F.unix_micros("ts") * F.lit(1000).cast("bigint"))
+        df = with_ts_nanos(df)
     per_session[key] = df
     return df
 

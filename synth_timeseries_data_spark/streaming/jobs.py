@@ -20,43 +20,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _ts_physical_unit(events_dir: str) -> str:
-    """Sniff the parquet footer for events.ts's physical encoding.
-
-    The fixture has shipped BOTH INT64 TIMESTAMP(NANOS) and timestamp[us]
-    across driver generations (see sources/tables.py::load, which handles
-    this for batch); a streaming reader's explicit schema must match the
-    footer or every job fails at read. Returns "ns" or "us".
-    """
-    import pyarrow.parquet as pq
-
-    path = events_dir
-    if os.path.isdir(path):
-        for entry in sorted(os.listdir(path)):
-            if entry.endswith(".parquet"):
-                path = os.path.join(path, entry)
-                break
-    ts_type = pq.read_schema(path).field("ts").type
-    # timestamp[ns]/timestamp[us] expose .unit; a plain INT64 (no logical
-    # type) is already epoch-ns in this fixture lineage → treat as "ns"
-    return getattr(ts_type, "unit", "ns")
+from ..sources.tables import ts_unit, with_ts_nanos
 
 
 def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """File-source stream of events with a proper event-time column.
 
-    The explicit readStream schema is chosen by sniffing the parquet footer
-    (same dual-encoding handling as the batch loader): TIMESTAMP(NANOS)
-    reads as bigint nanos under `nanosAsLong`, timestamp[us] reads as
-    TIMESTAMP_NTZ and is normalized with timezone-free arithmetic.
-    `maxFilesPerTrigger=1` keeps micro-batches small; `ts` is normalized to
-    the canonical nanosecond BIGINT and ts_event to TIMESTAMP via
-    microseconds, so every downstream job sees the same shapes as batch.
+    The explicit readStream schema follows the physical ``ts`` encoding in
+    the parquet footer (``sources.tables.ts_unit`` — a streaming reader's
+    schema must match the footer or every job fails at read):
+    TIMESTAMP(NANOS) reads as bigint nanos under `nanosAsLong`,
+    timestamp[us] reads as TIMESTAMP_NTZ and is normalized by the batch
+    loader's own rule (``sources.tables.with_ts_nanos``).
+    `maxFilesPerTrigger=1` keeps micro-batches small; ts_event is the
+    TIMESTAMP via microseconds, so every downstream job sees the same
+    shapes as batch.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    unit = _ts_physical_unit(events_dir)
-    ts_sql_type = "long" if unit == "ns" else "timestamp_ntz"
+    ts_sql_type = "long" if ts_unit(events_dir) == "ns" else "timestamp_ntz"
     schema = (
         f"event_id long, ts {ts_sql_type}, user_id long, event_type string, "
         "value double, props string"
@@ -66,15 +47,9 @@ def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
-    if unit != "ns":
-        raw = raw.withColumn(
-            "ts",
-            F.expr(
-                "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-            )
-            * F.lit(1000).cast("bigint"),
-        )
-    return raw.withColumn("ts_event", F.timestamp_micros(F.expr("ts div 1000")))
+    return with_ts_nanos(raw).withColumn(
+        "ts_event", F.timestamp_micros(F.expr("ts div 1000"))
+    )
 
 
 def tumbling_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

@@ -8,11 +8,14 @@ and restore/keep postures when inputs change within one session.
 
 from __future__ import annotations
 
+import os
+
 import synth_timeseries_data_spark.session as sess
+from synth_timeseries_data_spark.sources import tables
 
 
 def _with_bytes(monkeypatch, spark, nbytes, sf_dir="/fake/dir"):
-    monkeypatch.setattr(sess, "_input_bytes", lambda _d: nbytes)
+    monkeypatch.setattr(tables, "input_bytes", lambda _d: nbytes)
     sess.tune_for_input(spark, sf_dir)
     return spark.conf.get("spark.sql.shuffle.partitions")
 
@@ -46,3 +49,37 @@ def test_posture_restored_after_big(spark, monkeypatch):
     assert (
         int(_with_bytes(monkeypatch, spark, 1 << 50)) == sess._MAX_SHUFFLE
     )
+
+
+def test_hive_partitioned_entry_counts_its_part_files(spark, tmp_path):
+    # events.parquet written as a hive-partitioned tree: its part files sit
+    # one level below key=value directories, and a one-level listing read
+    # the entry as 0 bytes (small posture for a big input). Part files are
+    # sparse, so the footprint is large on paper and free on disk.
+    sizes = {"user=1": 40 << 20, "user=2": 48 << 20}
+    for part, size in sizes.items():
+        d = tmp_path / "events.parquet" / part
+        d.mkdir(parents=True)
+        with open(d / "part-0.parquet", "wb") as f:
+            f.truncate(size)
+    with open(tmp_path / "nation.parquet", "wb") as f:
+        f.truncate(4096)
+    (tmp_path / "notes.txt").write_text("not a dataset")
+    expect = sum(sizes.values()) + 4096
+    assert tables.input_bytes(str(tmp_path)) == expect
+    sess.tune_for_input(spark, str(tmp_path))
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    base = int(sess.session_state(spark)["posture"][1])
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == max(
+        base, expect // sess._TARGET_PARTITION_BYTES
+    )
+
+
+def test_unreadable_input_keeps_configured_posture(spark, tmp_path):
+    missing = str(tmp_path / "missing")
+    assert not os.path.exists(missing)
+    assert tables.input_bytes(missing) >= tables.UNKNOWN
+    sess.tune_for_input(spark, missing)
+    aqe, shuffle = sess.session_state(spark)["posture"]
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle

@@ -154,18 +154,30 @@ def test_table_rows_nested_dataset_and_empty_dir(tmp_path, oracle_sf_dir):
 def test_docs_disk_bytes_nested_dataset_and_empty_dir(tmp_path, oracle_sf_dir):
     """Same asymmetry for the vocab-broadcast gate's byte proxy: nested
     part files must be summed recursively, and an existing-but-empty
-    dataset dir is unknown/huge (keeps the shuffle-safe plan), not 0."""
+    dataset dir is unknown/huge (keeps the shuffle-safe plan), not 0.
+    The memo follows a rewrite: a documents file replaced in place by a
+    larger one is measured again."""
     import os
     import shutil
 
-    from synth_timeseries_data_spark.queries.llm_pipeline import _docs_disk_bytes
+    from synth_timeseries_data_spark.sources.tables import table_bytes
 
     nested = tmp_path / "documents.parquet" / "source=a"
     nested.mkdir(parents=True)
     shutil.copy(f"{oracle_sf_dir}/nation.parquet", nested / "part-0.parquet")
     expect = os.path.getsize(nested / "part-0.parquet")
-    assert _docs_disk_bytes(str(tmp_path)) == expect
+    assert table_bytes(str(tmp_path), "documents") == expect
 
     empty = tmp_path / "emptycase"
     (empty / "documents.parquet").mkdir(parents=True)
-    assert _docs_disk_bytes(str(empty)) >= 1 << 62
+    assert table_bytes(str(empty), "documents") >= 1 << 62
+
+    flat = tmp_path / "flatcase"
+    flat.mkdir()
+    shutil.copyfile(f"{oracle_sf_dir}/nation.parquet", flat / "documents.parquet")
+    small = table_bytes(str(flat), "documents")
+    assert small == os.path.getsize(flat / "documents.parquet")
+    shutil.copyfile(f"{oracle_sf_dir}/customer.parquet", flat / "documents.parquet")
+    assert table_bytes(str(flat), "documents") == os.path.getsize(
+        flat / "documents.parquet"
+    ) > small

@@ -108,6 +108,24 @@ def test_plot_bundle(spark, tmpdir_, smoke_sf_dir):
         assert r["trend"] == f["intercept"] + f["slope"] * r["x_day"]
 
 
+def test_plot_bundle_jobs_stay_in_caller_job_group(spark, tmpdir_, smoke_sf_dir):
+    """The bundle's three concurrent frame writes run on pool threads; each
+    must start its jobs in the caller's job group, or a job-group cancel
+    or a per-group job count misses them."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    grouped0 = set(st.getJobIdsForGroup("g"))
+    ungrouped0 = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "plot bundle")
+    try:
+        sinks.write_plot_bundle(spark, smoke_sf_dir, os.path.join(tmpdir_, "b"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    grouped = set(st.getJobIdsForGroup("g")) - grouped0
+    assert len(grouped) >= 3, grouped  # one write job per frame at least
+    assert set(st.getJobIdsForGroup(None)) - ungrouped0 == set()
+
+
 def test_publish_version_atomic_promotion(spark, oracle_sf_dir, tmp_path):
     """Versioned publish: v1 then v2, each readable; a reader that resolved
     v1 before the v2 swap still reads v1's untouched directory; a crashed
